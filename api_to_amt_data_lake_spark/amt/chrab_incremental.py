@@ -24,7 +24,7 @@ q99zy) into the view's own aggregation state:
   touched (`assemble(..., touched=...)` — a broadcast semi join whose
   key set the runtime bloom filter pushes into the silver scans), then
   spliced into the existing gold parquet with a broadcast anti join
-  (the `amt/incremental_gold.py` swap discipline).
+  (`amt/incremental_gold.splice_keys`).
 
 Contract (the test `tests/test_incremental_gold.py` pins it): after any
 sequence of attendance-event inserts/updates/deletes followed by
@@ -37,6 +37,15 @@ refresh diffs against — at real scale the ODS change-version API
 (`sources/rest.py`) supplies the CDF directly and the snapshot diff is
 skipped; here the diff is one id-keyed join over (id, 6 narrow cols),
 a tiny fraction of the view rebuild it replaces).
+
+Publishing: every state, snapshot and gold write goes through the
+`sources/parquet_io.py` stage-and-swap commit. A refresh stages each
+new state and snapshot at `<path>.next`, splices gold, and only then
+commits the staged directories (gold-then-states). Crash-repair rule:
+`refresh` first runs `parquet_io.repair` on gold and every state path,
+which puts back whatever a dead swap displaced; a crash after the gold
+commit but before the state commits leaves the OLD snapshots, so the
+re-run re-detects the same changes and re-splices identical rows.
 
 Null-key discipline: `fold_grouped_sums` folds state and deltas with a
 plain full-outer join, so group keys must never be NULL (a NULL key
@@ -58,9 +67,14 @@ from api_to_amt_data_lake_spark.amt.chrab.chronic_absenteeism_attendance_fact im
     CONTRACT,
     assemble,
 )
+from api_to_amt_data_lake_spark.amt.incremental_gold import (
+    read_contract_gold,
+    splice_keys,
+    stage_snapshot_diff,
+)
 from api_to_amt_data_lake_spark.functions.dates import date_key
 from api_to_amt_data_lake_spark.operators.delta_agg import fold_grouped_sums
-from api_to_amt_data_lake_spark.sources.incremental import frame_changes
+from api_to_amt_data_lake_spark.sources import parquet_io
 from api_to_amt_data_lake_spark.sources.json_source import read_collection
 from api_to_amt_data_lake_spark.sources.lookup import with_descriptor_constant
 
@@ -150,45 +164,9 @@ def _read_events(spark, silver_root, school_year, side):
     return event_indicators(ev, school_col, year_col)
 
 
-def _swap_write(df: DataFrame, path: str) -> None:
-    """Write-to-temp + rename (Spark cannot overwrite a path it is
-    reading; same discipline as `incremental_gold.refresh_view_incremental`)."""
-    tmp, old = path + ".swap-tmp", path + ".swap-old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _paths(state_root: str, side: str) -> tuple[str, str]:
     return (os.path.join(state_root, f"{side}_state"),
             os.path.join(state_root, f"{side}_snap"))
-
-
-def _repair_swap(path: str) -> None:
-    """Heal the rename-swap crash window: a crash between 'move live
-    aside' and 'move staged in' leaves the live dir missing with its
-    content intact at `.swap-old`. Restoring it keeps the refresh
-    incremental (the expensive alternative — the missing-state
-    full_build fallback — stays as the backstop for genuinely lost
-    state)."""
-    old = path + ".swap-old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-
-
-def _repair_all(state_root: str, gold: str) -> None:
-    for side in _SIDES:
-        for p in _paths(state_root, side):
-            _repair_swap(p)
-    _repair_swap(gold)
-
-
-def _gold_path(gold_root: str, school_year) -> str:
-    return os.path.join(gold_root, str(school_year), VIEW_NAME)
 
 
 def full_build(spark: SparkSession, silver_root: str,
@@ -197,7 +175,6 @@ def full_build(spark: SparkSession, silver_root: str,
     """Initial (or reset) build: materialize both indicator snapshots
     and grouped-sum states, then the gold view THROUGH the state path
     (counts_from_state), so the fold path is exercised from day one."""
-    os.makedirs(state_root, exist_ok=True)
     counts = {}
     for side in _SIDES:
         ind = _read_events(spark, silver_root, school_year, side)
@@ -207,51 +184,33 @@ def full_build(spark: SparkSession, silver_root: str,
             shutil.rmtree(snap_path, ignore_errors=True)
             counts[side] = None
             continue
-        _swap_write(ind, snap_path)
-        snap = spark.read.parquet(snap_path)
-        _swap_write(init_state(snap), state_path)
-        counts[side] = counts_from_state(
-            spark.read.parquet(state_path), side)
+        snap = spark.read.parquet(parquet_io.publish(ind, snap_path))
+        state = parquet_io.publish(init_state(snap), state_path)
+        counts[side] = counts_from_state(spark.read.parquet(state), side)
 
     ssa = read_collection(spark, silver_root, school_year,
                           "studentSchoolAssociations")
     cal = read_collection(spark, silver_root, school_year, "calendarDates")
-    gold = _gold_path(gold_root, school_year)
     if ssa is None or cal is None or "calendarEvents" not in cal.columns:
         view = CONTRACT.empty(spark)
     else:
         view = assemble(spark, ssa, cal, counts["sch"], counts["sec"],
                         run_date)
-    os.makedirs(os.path.dirname(gold), exist_ok=True)
     # Gold is hive-partitioned by DateKey: real attendance churn is
     # DATE-CLUSTERED (events land for recent days), so the splice can
     # rewrite only the touched date partitions instead of copying the
     # whole view — the Delta/Iceberg dynamic-partition-overwrite shape
     # on plain parquet, closing the "splice is O(gold)" flat-layout
     # cost SCALE.md called the irreducible term.
-    tmp = gold + ".swap-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(gold + ".swap-old", ignore_errors=True)
-    (view.repartition(F.col("DateKey"))
-     .write.partitionBy("DateKey").parquet(tmp))
-    old = gold + ".swap-old"
-    if os.path.exists(gold):
-        os.rename(gold, old)
-    os.rename(tmp, gold)
-    shutil.rmtree(old, ignore_errors=True)
-    return gold
+    return parquet_io.write_view(view, gold_root, VIEW_NAME, school_year,
+                                 partition_by="DateKey")
 
 
 def read_gold(spark: SparkSession, gold_root: str,
               school_year: str | int) -> DataFrame:
-    """Read the maintained gold back in CONTRACT column order and
-    types. The explicit schema keeps the DateKey PARTITION column a
-    string (type inference would int-ify 'yyyymmdd' values — and the
-    session-wide inference flag can't be flipped without breaking the
-    bucket store's int `_bkt` reads); conform restores exact order."""
-    df = spark.read.schema(CONTRACT.schema()).parquet(
-        _gold_path(gold_root, school_year))
-    return CONTRACT.conform(df, spark)
+    """The maintained gold in CONTRACT column order and types
+    (`incremental_gold.read_contract_gold`)."""
+    return read_contract_gold(spark, CONTRACT, gold_root, school_year)
 
 
 def _touched_keys(changes: DataFrame) -> DataFrame:
@@ -283,8 +242,11 @@ def refresh(spark: SparkSession, silver_root: str,
     output rows, splice them into gold. Returns per-side change counts
     (all zero = gold untouched). Falls back to `full_build` when the
     state or gold has never been materialized."""
-    gold = _gold_path(gold_root, school_year)
-    _repair_all(state_root, gold)  # prior-crash rename-swap leftovers
+    gold = parquet_io.gold_path(gold_root, VIEW_NAME, school_year)
+    parquet_io.repair(gold)
+    for side in _SIDES:
+        for p in _paths(state_root, side):
+            parquet_io.repair(p)
     inds = {side: _read_events(spark, silver_root, school_year, side)
             for side in _SIDES}
     sides_ready = all(
@@ -298,55 +260,36 @@ def refresh(spark: SparkSession, silver_root: str,
     stats: dict = {"full_build": False}
     touched_parts = []
     new_states = {}
-    pending = []  # (staged_dir, live_dir) renames, applied post-splice
+    staged = []  # live paths whose staged content commits post-splice
     for side in _SIDES:
         state_path, snap_path = _paths(state_root, side)
-        ind = inds[side]
-        has_snap = os.path.exists(snap_path)
-        if ind is None and not has_snap:
+        diff = stage_snapshot_diff(spark, snap_path, inds[side])
+        if diff is None:
             new_states[side] = None
             stats[side] = 0
             continue
-        snap = (spark.read.parquet(snap_path) if has_snap
-                else ind.limit(0))
-        # Stage the current indicators as parquet FIRST — the silver
-        # JSON is scanned exactly once per refresh; the diff and the
-        # post-splice snapshot commit both read the staged copy.
-        if ind is not None:
-            nxt_snap = snap_path + ".next"
-            shutil.rmtree(nxt_snap, ignore_errors=True)
-            ind.write.parquet(nxt_snap)
-            cur = spark.read.parquet(nxt_snap)
-        else:
-            nxt_snap = None
-            cur = snap.limit(0)
-        changes = frame_changes(
-            snap, cur, "_k", compare_cols=_GROUP + _SUMS,
-            include_old=True,
-        ).localCheckpoint()  # diff reused 3× (fold, touched, count)
+        changes = diff[0]  # reused 3× (fold, touched, count)
         n = changes.count()
         stats[side] = n
         state = spark.read.parquet(state_path) if os.path.exists(
             state_path) else None
         if n:
             # Stage the folded state beside the live one (the fold
-            # reads the live path) and commit by rename post-splice.
-            nxt_state = state_path + ".next"
-            shutil.rmtree(nxt_state, ignore_errors=True)
-            fold_grouped_sums(state, changes, _GROUP, _SUMS) \
-                .write.parquet(nxt_state)
-            new_state = spark.read.parquet(nxt_state)
+            # reads the live path); it commits post-splice.
+            new_state = spark.read.parquet(parquet_io.write_staged(
+                fold_grouped_sums(state, changes, _GROUP, _SUMS),
+                state_path))
             touched_parts.append(_touched_keys(changes))
-            pending.append((nxt_state, state_path))
-            if nxt_snap is not None:
-                pending.append((nxt_snap, snap_path))
+            staged.append(state_path)
         else:
             new_state = state
-            if nxt_snap is not None:
-                shutil.rmtree(nxt_snap, ignore_errors=True)
+        if inds[side] is not None:
+            staged.append(snap_path)
         new_states[side] = new_state
 
     if not touched_parts:
+        for p in staged:  # unchanged snapshots: same rows
+            parquet_io.commit(p)
         return stats
 
     touched = touched_parts[0]
@@ -376,72 +319,17 @@ def refresh(spark: SparkSession, silver_root: str,
     # NULL-key gold rows are invariant under event CDC (an event with a
     # NULL group key can never equi-join a base row), so the plain-
     # equality anti join leaving them untouched is exactly right.
-    tk_gold = F.broadcast(
-        touched.select(
-            "StudentKey", "SchoolKey",
-            F.substring(F.regexp_replace("_date", "-", ""), 1, 8)
-            .alias("DateKey")))
-    partitioned = any(
-        d.startswith("DateKey=") for d in os.listdir(gold))
-    if partitioned:
-        # DATE-PARTITIONED SPLICE: real churn is date-clustered, so
-        # only the touched DateKey partitions are read (partition
-        # pruning via the explicit-schema read) and rewritten; every
-        # other date's files are never opened. A crash between the
-        # per-partition swaps is healed by re-running the refresh: the
-        # snapshots commit after gold, so the same changes re-detect
-        # and the recompute is idempotent.
-        tdates = sorted({
-            r[0] for r in touched.select(
-                F.substring(F.regexp_replace("_date", "-", ""), 1, 8)
-                .alias("dk")).distinct().collect()
-            if r[0] is not None})
+    tdates = splice_keys(spark, gold, recomputed, touched.select(
+        "StudentKey", "SchoolKey",
+        F.substring(F.regexp_replace("_date", "-", ""), 1, 8)
+        .alias("DateKey")))
+    if tdates is not None:
         stats["touched_dates"] = len(tdates)
-        gold_df = spark.read.schema(CONTRACT.schema()).parquet(gold)
-        carried_t = (
-            gold_df.filter(F.col("DateKey").isin(tdates))
-            .join(tk_gold, ["StudentKey", "SchoolKey", "DateKey"],
-                  "left_anti")
-        )
-        out = carried_t.unionByName(recomputed) \
-            .select(*CONTRACT.columns)
-        stage = gold + ".stage"
-        shutil.rmtree(stage, ignore_errors=True)
-        (out.repartition(F.col("DateKey"))
-         .write.partitionBy("DateKey").parquet(stage))
-        for dk in tdates:
-            src = os.path.join(stage, f"DateKey={dk}")
-            dst = os.path.join(gold, f"DateKey={dk}")
-            old = dst + ".swap-old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(dst):
-                os.rename(dst, old)
-            if os.path.exists(src):
-                os.rename(src, dst)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-    else:
-        # Legacy flat layout: full-copy splice (the pre-r11 shape).
-        carried = (
-            spark.read.parquet(gold)
-            .join(tk_gold, ["StudentKey", "SchoolKey", "DateKey"],
-                  "left_anti")
-        )
-        # The anti join moves its keys to the front; restore contract
-        # order so the spliced gold stays positionally identical to a
-        # full build (downstream exceptAll/diff checks are positional).
-        _swap_write(carried.unionByName(recomputed)
-                    .select(*CONTRACT.columns), gold)
-    # Commit states and snapshots by rename. A crash between the gold
-    # swap and these renames is safe: the next refresh re-diffs against
+    # Commit states and snapshots after gold. A crash between the gold
+    # swap and these commits is safe: the next refresh re-diffs against
     # the OLD snapshot, re-detects the same changes, and re-splices the
     # identical recomputed rows (the recompute is idempotent — gold
     # rows for a touched key are fully replaced, never accumulated).
-    for staged, live in pending:
-        old = live + ".swap-old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(live):
-            os.rename(live, old)
-        os.rename(staged, live)
-        shutil.rmtree(old, ignore_errors=True)
+    for p in staged:
+        parquet_io.commit(p)
     return stats

@@ -34,6 +34,14 @@ Contract (tests/test_ews_incremental.py): after any sequence of
 inserts/updates/deletes on the five maintained collections followed by
 `refresh(...)`, the gold parquet is row-identical to a full `build(...)`
 over the current silver.
+
+Publishing is chrab's: states, snapshots and the DateKey-partitioned
+gold go through the `sources/parquet_io.py` stage-and-swap commit, the
+gold splice is `amt/incremental_gold.splice_keys`, and staged states
+and snapshots commit after gold. Crash-repair rule: `refresh` first
+runs `parquet_io.repair` on gold and every state path, and a crash
+between the gold and state commits heals by re-running (the old
+snapshots re-detect the same changes).
 """
 
 from __future__ import annotations
@@ -50,6 +58,11 @@ from api_to_amt_data_lake_spark.amt.ews.student_early_warning_fact import (
     assemble,
     section_day_flags,
 )
+from api_to_amt_data_lake_spark.amt.incremental_gold import (
+    read_contract_gold,
+    splice_keys,
+    stage_snapshot_diff,
+)
 from api_to_amt_data_lake_spark.operators.delta_agg import (
     delta_join_signed,
     fold_grouped_sums,
@@ -57,7 +70,7 @@ from api_to_amt_data_lake_spark.operators.delta_agg import (
     grouped_sums,
     signed_changes,
 )
-from api_to_amt_data_lake_spark.sources.incremental import frame_changes
+from api_to_amt_data_lake_spark.sources import parquet_io
 from api_to_amt_data_lake_spark.sources.json_source import read_collection
 from api_to_amt_data_lake_spark.sources.lookup import with_descriptor_constant
 
@@ -254,21 +267,6 @@ def _paths(state_root: str, name: str) -> tuple[str, str]:
             os.path.join(state_root, f"{name}_snap"))
 
 
-def _gold_path(gold_root: str, school_year) -> str:
-    return os.path.join(gold_root, str(school_year), VIEW_NAME)
-
-
-def _swap_write(df: DataFrame, path: str) -> None:
-    tmp, old = path + ".swap-tmp", path + ".swap-old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _read_snapshots(spark, silver_root, school_year):
     """Current silver → the five id-keyed snapshot frames (None for a
     missing collection)."""
@@ -302,7 +300,6 @@ def full_build(spark: SparkSession, silver_root: str,
                run_date: str | None = None) -> str:
     """Initial (or reset) build: materialize the snapshots and states,
     then the gold view THROUGH the state path."""
-    os.makedirs(state_root, exist_ok=True)
     snaps = _read_snapshots(spark, silver_root, school_year)
     mat = {}
     for name, df in snaps.items():
@@ -312,47 +309,33 @@ def full_build(spark: SparkSession, silver_root: str,
             shutil.rmtree(snap_path, ignore_errors=True)
             mat[name] = None
             continue
-        _swap_write(df, snap_path)
-        mat[name] = spark.read.parquet(snap_path)
+        mat[name] = spark.read.parquet(parquet_io.publish(df, snap_path))
     for name, group, sums in (("sch", _SCH_GROUP, _SCH_SUMS),
                               ("sec", _SEC_GROUP, _SCH_SUMS)):
         if mat[name] is None:
             continue
         state_path, _ = _paths(state_root, name)
-        _swap_write(grouped_sums(mat[name].drop("_k"), group, sums),
-                    state_path)
+        parquet_io.publish(grouped_sums(mat[name].drop("_k"), group, sums),
+                           state_path)
     if mat["inc"] is not None and mat["beh"] is not None:
-        _swap_write(_disc_state_full(mat["inc"], mat["beh"]),
-                    _paths(state_root, "disc")[0])
+        parquet_io.publish(_disc_state_full(mat["inc"], mat["beh"]),
+                           _paths(state_root, "disc")[0])
     else:
         shutil.rmtree(_paths(state_root, "disc")[0], ignore_errors=True)
 
-    gold = _gold_path(gold_root, school_year)
-    os.makedirs(os.path.dirname(gold), exist_ok=True)
     # DateKey-partitioned gold, the chrab_incremental discipline: the
     # splice rewrites only touched date partitions.
     view = _assemble_from_states(spark, silver_root, school_year,
                                  state_root, run_date)
-    tmp, old = gold + ".swap-tmp", gold + ".swap-old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    (view.repartition(F.col("DateKey"))
-     .write.partitionBy("DateKey").parquet(tmp))
-    if os.path.exists(gold):
-        os.rename(gold, old)
-    os.rename(tmp, gold)
-    shutil.rmtree(old, ignore_errors=True)
-    return gold
+    return parquet_io.write_view(view, gold_root, VIEW_NAME, school_year,
+                                 partition_by="DateKey")
 
 
 def read_gold(spark: SparkSession, gold_root: str,
               school_year: str | int) -> DataFrame:
-    """Contract-ordered read of the maintained gold (explicit schema
-    keeps the DateKey partition column a string — see
-    chrab_incremental.read_gold)."""
-    df = spark.read.schema(CONTRACT.schema()).parquet(
-        _gold_path(gold_root, school_year))
-    return CONTRACT.conform(df, spark)
+    """The maintained gold in CONTRACT column order and types
+    (`incremental_gold.read_contract_gold`)."""
+    return read_contract_gold(spark, CONTRACT, gold_root, school_year)
 
 
 def _state(spark, state_root, name):
@@ -431,18 +414,13 @@ def refresh(spark: SparkSession, silver_root: str,
     touched (student, school, day) keys only, splice into gold.
     Returns per-source change counts; falls back to `full_build` when
     state or gold has never been materialized."""
-    gold = _gold_path(gold_root, school_year)
-    # Heal prior-crash rename-swap leftovers (live dir missing, content
-    # at .swap-old — the chrab_incremental._repair_swap discipline) so
-    # a crash mid-commit stays incremental instead of forcing the
-    # missing-state full_build fallback.
-    from api_to_amt_data_lake_spark.amt.chrab_incremental import (
-        _repair_swap,
-    )
+    gold = parquet_io.gold_path(gold_root, VIEW_NAME, school_year)
+    # Heal a prior crash mid-commit so it stays incremental instead of
+    # forcing the missing-state full_build fallback.
+    parquet_io.repair(gold)
     for name in _SNAPS + ("disc",):
         for p in _paths(state_root, name):
-            _repair_swap(p)
-    _repair_swap(gold)
+            parquet_io.repair(p)
     snaps_now = _read_snapshots(spark, silver_root, school_year)
     ready = os.path.exists(gold) and all(
         os.path.exists(_paths(state_root, n)[1])
@@ -453,38 +431,23 @@ def refresh(spark: SparkSession, silver_root: str,
         return {"full_build": True}
 
     stats: dict = {"full_build": False}
-    pending: list[tuple[str, str]] = []  # (staged, live) renames
+    staged: list[str] = []  # live paths committed after gold
     diffs: dict[str, DataFrame | None] = {}
     news: dict[str, DataFrame | None] = {}
     for name, df in snaps_now.items():
-        state_path, snap_path = _paths(state_root, name)
-        has_snap = os.path.exists(snap_path)
-        if df is None and not has_snap:
+        snap_path = _paths(state_root, name)[1]
+        diff = stage_snapshot_diff(spark, snap_path, df)
+        if diff is None:
             diffs[name] = None
             news[name] = None
             stats[name] = 0
             continue
-        old = spark.read.parquet(snap_path) if has_snap else df.limit(0)
         if df is not None:
-            nxt = snap_path + ".next"
-            shutil.rmtree(nxt, ignore_errors=True)
-            df.write.parquet(nxt)  # ONE silver scan per source
-            cur = spark.read.parquet(nxt)
-        else:
-            nxt, cur = None, old.limit(0)
-        cols = [c for c in cur.columns if c != "_k"]
-        changes = frame_changes(old, cur, "_k", compare_cols=cols,
-                                include_old=True).localCheckpoint()
+            staged.append(snap_path)
+        changes, news[name] = diff
         n = changes.count()
         stats[name] = n
         diffs[name] = changes if n else None
-        news[name] = cur
-        if n and nxt is not None:
-            pending.append((nxt, snap_path))
-        elif nxt is not None:
-            shutil.rmtree(nxt, ignore_errors=True)
-    if not any(diffs[n] is not None for n in _SNAPS):
-        return stats
 
     touched_parts = []
     states: dict = {}
@@ -496,12 +459,10 @@ def refresh(spark: SparkSession, silver_root: str,
         if ch is None:
             continue
         state_path = _paths(state_root, name)[0]
-        state = _state(spark, state_root, name)
-        nxt = state_path + ".next"
-        shutil.rmtree(nxt, ignore_errors=True)
-        fold_grouped_sums(state, ch, group, sums).write.parquet(nxt)
-        states[name] = spark.read.parquet(nxt)
-        pending.append((nxt, state_path))
+        states[name] = spark.read.parquet(parquet_io.write_staged(
+            fold_grouped_sums(_state(spark, state_root, name), ch, group,
+                              sums), state_path))
+        staged.append(state_path)
         touched_parts.append(_images(ch, ["_student", "_school",
                                           "_evdate"]))
 
@@ -524,13 +485,11 @@ def refresh(spark: SparkSession, silver_root: str,
             *[_sent(c).alias(c) for c in _DISC_GROUP],
             *_DISC_SUMS, "_sgn").localCheckpoint()
         state_path = _paths(state_root, "disc")[0]
-        nxt = state_path + ".next"
-        shutil.rmtree(nxt, ignore_errors=True)
-        fold_grouped_sums_signed(_state(spark, state_root, "disc"),
-                                 delta, _DISC_GROUP, _DISC_SUMS) \
-            .write.parquet(nxt)
-        states["disc"] = spark.read.parquet(nxt)
-        pending.append((nxt, state_path))
+        states["disc"] = spark.read.parquet(parquet_io.write_staged(
+            fold_grouped_sums_signed(_state(spark, state_root, "disc"),
+                                     delta, _DISC_GROUP, _DISC_SUMS),
+            state_path))
+        staged.append(state_path)
         touched_parts.append(delta.select(
             "_student", "_school",
             F.col("_incdate").alias("_evdate")))
@@ -547,10 +506,10 @@ def refresh(spark: SparkSession, silver_root: str,
         states["assoc_snap"] = news["assoc"]
 
     if not touched_parts:
-        # Only no-op diffs (e.g. assoc change matching no events):
-        # states/snapshots still commit.
-        for staged, live in pending:
-            _commit_rename(staged, live)
+        # No diffs, or only no-op ones (e.g. an assoc change matching
+        # no events): states/snapshots still commit.
+        for p in staged:
+            parquet_io.commit(p)
         return stats
 
     touched = touched_parts[0]
@@ -568,59 +527,13 @@ def refresh(spark: SparkSession, silver_root: str,
     recomputed = _assemble_from_states(
         spark, silver_root, school_year, state_root, run_date,
         touched=touched, states=states)
-    tk_gold = F.broadcast(
-        touched.select("StudentKey", "SchoolKey",
-                       F.regexp_replace("_date", "-", "")
-                       .substr(1, 8).alias("DateKey")))
-    if any(d.startswith("DateKey=") for d in os.listdir(gold)):
-        # Touched-date-partition splice (chrab_incremental discipline;
-        # crash between per-partition swaps heals by re-running — the
-        # snapshots commit after gold).
-        tdates = sorted({
-            r[0] for r in touched.select(
-                F.regexp_replace("_date", "-", "").substr(1, 8)
-                .alias("dk")).distinct().collect()
-            if r[0] is not None})
+    # Touched-date-partition splice (crash between per-partition swaps
+    # heals by re-running — the snapshots commit after gold).
+    tdates = splice_keys(spark, gold, recomputed, touched.select(
+        "StudentKey", "SchoolKey",
+        F.regexp_replace("_date", "-", "").substr(1, 8).alias("DateKey")))
+    if tdates is not None:
         stats["touched_dates"] = len(tdates)
-        gold_df = spark.read.schema(CONTRACT.schema()).parquet(gold)
-        carried_t = (
-            gold_df.filter(F.col("DateKey").isin(tdates))
-            .join(tk_gold, ["StudentKey", "SchoolKey", "DateKey"],
-                  "left_anti"))
-        out = carried_t.unionByName(recomputed) \
-            .select(*CONTRACT.columns)
-        stage = gold + ".stage"
-        shutil.rmtree(stage, ignore_errors=True)
-        (out.repartition(F.col("DateKey"))
-         .write.partitionBy("DateKey").parquet(stage))
-        for dk in tdates:
-            src = os.path.join(stage, f"DateKey={dk}")
-            dst = os.path.join(gold, f"DateKey={dk}")
-            old = dst + ".swap-old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(dst):
-                os.rename(dst, old)
-            if os.path.exists(src):
-                os.rename(src, dst)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-    else:
-        # Legacy flat layout: full-copy splice.
-        carried = (
-            spark.read.parquet(gold)
-            .join(tk_gold, ["StudentKey", "SchoolKey", "DateKey"],
-                  "left_anti"))
-        _swap_write(carried.unionByName(recomputed)
-                    .select(*CONTRACT.columns), gold)
-    for staged, live in pending:
-        _commit_rename(staged, live)
+    for p in staged:
+        parquet_io.commit(p)
     return stats
-
-
-def _commit_rename(staged: str, live: str) -> None:
-    old = live + ".swap-old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(live):
-        os.rename(live, old)
-    os.rename(staged, live)
-    shutil.rmtree(old, ignore_errors=True)

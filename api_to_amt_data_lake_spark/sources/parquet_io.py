@@ -9,9 +9,24 @@ partition pruning then makes per-year reads free (SURVEY.md §4).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Every gold view and IVM state directory is replaced by ONE protocol:
+# the new content is written beside the live directory at `<path>.next`,
+# then committed by two renames (live aside to `<path>.old`, staged in).
+# A partition commit displaces only the touched `<col>=<v>` directories,
+# into `<path>.old-parts` — outside the live view, so a reader of the
+# view never sees a displaced partition. Every name the protocol makes
+# is the live path plus STAGING_MARK and a tag; no view or state name
+# contains the mark, so `register_gold_views` skips such names and
+# `repair` sweeps them.
+STAGING_MARK = "."
+_NEXT = STAGING_MARK + "next"
+_OLD = STAGING_MARK + "old"
+_OLD_PARTS = STAGING_MARK + "old-parts"
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -32,19 +47,101 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_view(df: DataFrame, gold_root: str, view_name: str,
-               school_year: str | int | None = None,
-               partition_by: str | None = None) -> str:
-    """Write a gold view. Overwrite mode replaces the reference's
-    delete-then-write (`helper/helper.py:78-100` + `pandasWrapper.py:128-135`).
+def gold_path(gold_root: str, view_name: str,
+              school_year: str | int | None = None) -> str:
+    """Directory of one gold view: `{gold_root}/{school_year}/{view_name}`,
+    or `{gold_root}/{view_name}` without a year."""
+    return os.path.join(gold_root, str(school_year), view_name) \
+        if school_year else os.path.join(gold_root, view_name)
+
+
+def repair(path: str) -> None:
+    """Heal a commit of `path` that died part-way (see STAGING_MARK).
+
+    Crash-repair rule: a displaced directory whose replacement never
+    arrived is put back — the whole `<path>.old` when `path` is missing,
+    each `<path>.old-parts/<p>` when `path/<p>` is missing — and every
+    other `<path>.*` leftover is deleted. The result is the old content,
+    or for a partition commit a mix of old and new partitions; callers
+    that splice (amt/incremental_gold.py) heal the mix by re-running the
+    same splice, which is idempotent.
     """
-    path = os.path.join(gold_root, str(school_year), view_name) if school_year \
-        else os.path.join(gold_root, view_name)
+    old = path + _OLD
+    if os.path.isdir(old) and not os.path.exists(path):
+        os.rename(old, path)
+    parts = path + _OLD_PARTS
+    if os.path.isdir(parts):
+        for p in os.listdir(parts):
+            if not os.path.exists(os.path.join(path, p)):
+                os.rename(os.path.join(parts, p), os.path.join(path, p))
+    parent, base = os.path.split(path)
+    if os.path.isdir(parent):
+        for name in os.listdir(parent):
+            if name.startswith(base + STAGING_MARK):
+                shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+
+
+def write_staged(df: DataFrame, path: str,
+                 partition_by: str | None = None) -> str:
+    """Write `df` as the next content of `path` (nothing live changes
+    until `commit`); returns the staged directory, which the caller may
+    read until the commit. `partition_by` writes one file per value."""
+    staged = path + _NEXT
+    if partition_by:
+        df = df.repartition(F.col(partition_by))
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    writer.parquet(path)
+    writer.parquet(staged)
+    return staged
+
+
+def commit(path: str, partitions: list[str] | None = None) -> None:
+    """Swap the staged content of `path` in. With `partitions`
+    (directory names such as `DateKey=20231010`), only those partitions
+    of a partitioned `path` are replaced; one absent from the stage is
+    removed. `repair` undoes a crash at any point in between."""
+    staged = path + _NEXT
+    if partitions is None:
+        old = path + _OLD
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(staged, path)
+        shutil.rmtree(old, ignore_errors=True)
+        return
+    displaced = path + _OLD_PARTS
+    os.makedirs(displaced, exist_ok=True)
+    for p in partitions:
+        if os.path.exists(os.path.join(path, p)):
+            os.rename(os.path.join(path, p), os.path.join(displaced, p))
+        if os.path.exists(os.path.join(staged, p)):
+            os.rename(os.path.join(staged, p), os.path.join(path, p))
+    shutil.rmtree(displaced)
+    shutil.rmtree(staged)
+
+
+def publish(df: DataFrame, path: str,
+            partition_by: str | None = None) -> str:
+    """Replace the parquet directory `path` by `df`: repair, stage,
+    commit. Because the live directory is only renamed after `df` is
+    fully written, `df` may read `path` itself."""
+    repair(path)
+    write_staged(df, path, partition_by)
+    commit(path)
     return path
+
+
+def write_view(df: DataFrame, gold_root: str, view_name: str,
+               school_year: str | int | None = None,
+               partition_by: str | None = None) -> str:
+    """Write a gold view through `publish`. Replaces the reference's
+    delete-then-write (`helper/helper.py:78-100` +
+    `pandasWrapper.py:128-135`) without its window where the view is
+    missing.
+    """
+    return publish(df, gold_path(gold_root, view_name, school_year),
+                   partition_by)
 
 
 def write_view_csv(df: DataFrame, gold_root: str, view_name: str,
@@ -54,8 +151,7 @@ def write_view_csv(df: DataFrame, gold_root: str, view_name: str,
     header row. Inspection/debug only: CSV drops types and nested
     structure, so parquet remains the canonical gold format.
     """
-    path = (os.path.join(gold_root, str(school_year), f"{view_name}_csv")
-            if school_year else os.path.join(gold_root, f"{view_name}_csv"))
+    path = gold_path(gold_root, f"{view_name}_csv", school_year)
     df.write.mode("overwrite").option("header", True).csv(path)
     return path
 
@@ -244,7 +340,9 @@ def register_gold_views(spark: SparkSession, gold_root: str,
     lake is queryable with raw `spark.sql("SELECT ... FROM schoolDim
     JOIN ...")` — the analyst-facing surface of the reference's gold
     parquet folder. View names are the registry names (schoolDim,
-    studentSectionDim, ...). Returns the registered names.
+    studentSectionDim, ...). Returns the registered names. CSV debug
+    copies and staging leftovers (any name with STAGING_MARK) are not
+    views and are skipped.
 
     Temp views are metadata only: queries read the parquet lazily with
     full pushdown/pruning, exactly like `spark.read.parquet`.
@@ -255,7 +353,7 @@ def register_gold_views(spark: SparkSession, gold_root: str,
         return names
     for name in sorted(os.listdir(year_dir)):
         path = os.path.join(year_dir, name)
-        if name.endswith(("_csv", ".refresh-tmp", ".refresh-old")) \
+        if name.endswith("_csv") or STAGING_MARK in name \
                 or not os.path.isdir(path):
             continue
         spark.read.parquet(path).createOrReplaceTempView(name)

@@ -133,6 +133,10 @@ def test_register_gold_views_sql_surface(spark, tmp_path):
     refresh_view_incremental(
         spark, "dateDim", str(silver), str(gold), SY,
         _keys(spark, "20230815", "20230902"), "DateKey")
+    # a staging copy stranded by a crashed swap is not a view
+    import shutil
+    shutil.copytree(gold / str(SY) / "dateDim",
+                    gold / str(SY) / "dateDim.swap-tmp")
     names = register_gold_views(spark, str(gold), SY)
     assert "dateDim" in names
     rows = spark.sql(

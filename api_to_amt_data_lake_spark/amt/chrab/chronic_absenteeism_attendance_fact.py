@@ -132,8 +132,8 @@ def assemble(spark: SparkSession, ssa: DataFrame, cal: DataFrame,
 
     Split out of `build` so the count frames can come either from the
     raw silver events (`_event_counts`, the full rebuild) or from the
-    incrementally-maintained grouped-sum state
-    (`amt/chrab_incremental.py` — the fold path). With `touched`
+    per-event indicator snapshots (`amt/chrab_incremental.py` — the
+    incremental path). With `touched`
     (columns `StudentKey SchoolKey _date`), the enrollment×day base is
     semi-joined down to the touched output keys first, so a delta
     refresh computes only the changed rows (the broadcast semi join +

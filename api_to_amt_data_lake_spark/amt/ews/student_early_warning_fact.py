@@ -228,8 +228,8 @@ def assemble(spark: SparkSession, ssa: DataFrame, cal: DataFrame,
              touched: DataFrame | None = None) -> DataFrame:
     """The view body downstream of the three count frames (split out of
     `build` so they can come either from the raw silver events or from
-    the incrementally-maintained grouped-sum states —
-    `amt/ews_incremental.py`): enrollment × calendar-event base,
+    the per-collection snapshots — `amt/ews_incremental.py`):
+    enrollment × calendar-event base,
     left-join the school crosstab / section per-day flags / discipline
     counts, zero-fill, contract conform. With `touched` (columns
     `StudentKey SchoolKey _date` — raw date strings), the base is

@@ -31,18 +31,19 @@ from api_to_amt_data_lake_spark.sources.parquet_io import register_gold_views
 # (child view, child FK column, parent view, parent key column)
 RI_CHECKS: list[tuple[str, str, str, str]] = [
     ("studentSchoolDim", "SchoolKey", "schoolDim", "SchoolKey"),
+    # Section rows and the attendance facts cover each student's whole
+    # enrollment window, so their RI parent is allStudentSchoolDim
+    # (every association, including exited ones) — studentSchoolDim is
+    # the IsEnrolled == 1 subset by reference design, and a student who
+    # exited mid-year legitimately keeps section and fact rows from
+    # before the exit. (Found by the r9 100k scale run: 10% synthetic
+    # mid-year exits orphaned 201k fact rows against the filtered dim;
+    # 0 against the full association set.)
     ("studentSectionDim", "StudentSchoolKey",
-     "studentSchoolDim", "StudentSchoolKey"),
+     "allStudentSchoolDim", "StudentSchoolKey"),
     ("ews_studentSectionGradeFact", "StudentSectionKey",
      "studentSectionDim", "StudentSectionKey"),
     ("ews_studentSectionGradeFact", "SchoolKey", "schoolDim", "SchoolKey"),
-    # The attendance facts cover each student's whole enrollment window,
-    # so their RI parent is allStudentSchoolDim (every association,
-    # including exited ones) — studentSchoolDim is the IsEnrolled == 1
-    # subset by reference design, and a student who exited mid-year
-    # legitimately keeps fact rows from before the exit. (Found by the
-    # r9 100k scale run: 10% synthetic mid-year exits orphaned 201k fact
-    # rows against the filtered dim; 0 against the full association set.)
     ("chrab_chronicAbsenteeismAttendanceFact", "StudentSchoolKey",
      "allStudentSchoolDim", "StudentSchoolKey"),
     ("chrab_chronicAbsenteeismAttendanceFact", "SchoolKey",

@@ -8802,8 +8802,9 @@ FROM a_new JOIN b_new USING (k) GROUP BY 1
 def q99zzv_signed_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GENERAL join-aggregate IVM — q99zzl extended from insert-only to
     inserts, UPDATES, and DELETES on both sides (`operators/delta_agg
-    .py::signed_changes/delta_join_signed/fold_grouped_sums_signed`,
-    the machinery behind `amt/ews_incremental.py`'s discipline state):
+    .py::signed_changes/delta_join_signed/fold_grouped_sums_signed`;
+    `amt/ews_incremental.py` keeps no folded state and recomputes its
+    discipline counts from the incident and behavior snapshots):
     orders and lineitem each get a deterministic old→new version step
     (key%7==1 deleted, ==0 inserted, ==2 updated — a group-moving
     priority rename on the A side, a value change on the B side), the

@@ -11,6 +11,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """Half of physical RAM, capped at 48g: a local JVM heap sized past the
+    host lets the JVM grow until the kernel OOM-kills it."""
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(ram_mb // 2, 48 * 1024)}m"
+
+
 def get_spark(app_name: str = "api_to_amt_data_lake_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-appropriate defaults.
@@ -49,8 +56,9 @@ def get_spark(app_name: str = "api_to_amt_data_lake_spark",
         return active
     builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
     if "local" in os.environ.get("SPARK_GRAFT_MASTER", "local"):
-        builder = builder.config("spark.driver.memory",
-                                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        builder = builder.config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_heap()))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

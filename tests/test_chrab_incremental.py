@@ -1,12 +1,14 @@
 """IVM-maintained chrab gold (amt/chrab_incremental.py): the contract is
 refresh(...) ≡ full build of the view over the CURRENT silver, for any
 sequence of attendance-event inserts / updates / deletes — with the
-event crosstab folded as a grouped-sum state (q99zy's algebra), never
-re-aggregated from scratch."""
+event crosstab recomputed from the committed event snapshots for the
+touched keys only, never re-aggregated over the whole collection."""
 
 from __future__ import annotations
 
 import json
+
+import pytest
 
 SY = 2023
 URI = "uri://ed-fi.org"
@@ -141,17 +143,18 @@ def test_fold_refresh_matches_full_rebuild(spark, tmp_path):
     _assert_gold_matches_full(spark, silver, gold)
 
 
+@pytest.mark.parametrize("crash_at", [1, 2])
 def test_crash_between_gold_and_state_commit_heals_on_rerun(
-        spark, tmp_path, monkeypatch):
-    """The refresh commit order is gold-then-states; a crash in the
-    window leaves NEW gold with OLD snapshots. The healing claim: the
-    next refresh re-detects the same changes (old snapshot diff) and
-    re-splices identical rows — gold converges to the full rebuild,
-    never duplicates. Inject the crash by failing the first
-    state/snapshot rename."""
+        spark, tmp_path, monkeypatch, crash_at):
+    """The refresh commit order is gold-then-snapshots; a crash at the
+    1st or 2nd snapshot commit leaves NEW gold with an OLD snapshot for
+    every side not yet committed. The healing claim: the next refresh
+    re-detects exactly those sides' changes and re-splices identical
+    rows — gold converges to the full rebuild, and a later refresh of a
+    real change still does (no change applied twice or lost). Inject
+    the crash by failing the `crash_at`-th staged rename under the
+    state root."""
     import os as _os
-
-    import pytest
 
     from api_to_amt_data_lake_spark.amt import chrab_incremental as ci
 
@@ -163,31 +166,38 @@ def test_crash_between_gold_and_state_commit_heals_on_rerun(
     _write(silver, "studentSchoolAttendanceEvents",
            [_sch_ev(1, "STU0", 100, "2023-09-01", "In Attendance"),
             _sch_ev(2, "STU2", 100, "2023-09-02", "Excused Absence")])
+    _write(silver, "studentSectionAttendanceEvents",
+           [_sec_ev(1, "STU3", 101, "2023-09-02", "In Attendance")])
     ci.full_build(spark, str(silver), SY, str(state), str(gold),
                   run_date=RUN_DATE)
+    assert sorted(_os.listdir(state)) == ["sch_snap", "sec_snap"]
 
     _write(silver, "studentSchoolAttendanceEvents",
            [_sch_ev(1, "STU0", 100, "2023-09-01", "Excused Absence"),
             _sch_ev(3, "STU4", 100, "2023-09-03", "In Attendance")])
 
     real_rename = _os.rename
+    staged_renames = []
 
     def boom(src, dst):
         if ".next" in str(src) and str(state) in str(src):
-            raise OSError("injected crash at state commit")
+            staged_renames.append(src)
+            if len(staged_renames) == crash_at:
+                raise OSError("injected crash at state commit")
         return real_rename(src, dst)
 
-    monkeypatch.setattr(ci.os, "rename", boom)
+    monkeypatch.setattr(_os, "rename", boom)
     with pytest.raises(OSError, match="injected"):
         ci.refresh(spark, str(silver), SY, str(state), str(gold),
                    run_date=RUN_DATE)
-    monkeypatch.setattr(ci.os, "rename", real_rename)
+    monkeypatch.setattr(_os, "rename", real_rename)
 
-    # Re-run: the old snapshot re-detects the same 3 changes and the
-    # re-splice is idempotent.
+    # Re-run: a still-old snapshot re-detects the same 3 changes and
+    # the re-splice is idempotent; a committed one has none left.
     stats = ci.refresh(spark, str(silver), SY, str(state), str(gold),
                        run_date=RUN_DATE)
-    assert stats["full_build"] is False and stats["sch"] == 3
+    assert stats["full_build"] is False
+    assert stats["sch"] == (3 if crash_at == 1 else 0)
     _assert_gold_matches_full(spark, silver, gold)
 
     # And a third refresh is a clean no-op.
@@ -195,6 +205,16 @@ def test_crash_between_gold_and_state_commit_heals_on_rerun(
                        run_date=RUN_DATE)
     assert stats["sch"] == 0
     _assert_gold_matches_full(spark, silver, gold)
+
+    # A clean refresh of a real change after the heal: flip ae1 back.
+    _write(silver, "studentSchoolAttendanceEvents",
+           [_sch_ev(1, "STU0", 100, "2023-09-01", "In Attendance"),
+            _sch_ev(3, "STU4", 100, "2023-09-03", "In Attendance")])
+    stats = ci.refresh(spark, str(silver), SY, str(state), str(gold),
+                       run_date=RUN_DATE)
+    assert stats["full_build"] is False and stats["sch"] == 1
+    _assert_gold_matches_full(spark, silver, gold)
+    assert sorted(_os.listdir(state)) == ["sch_snap", "sec_snap"]
 
 
 def test_refresh_without_state_falls_back_to_full_build(spark, tmp_path):

@@ -1,10 +1,9 @@
 """IVM-maintained ews gold (amt/ews_incremental.py): refresh(...) must
 equal a full build over the current silver for any CDC sequence on the
 five maintained collections — including the two shapes chrab didn't
-exercise: the discipline count state folded from a SIGNED join delta
-(either side of incidents ⋈ behaviors changing), and the per-day
-section max recomputed for touched groups over the foldable
-per-section count state."""
+exercise: discipline counts over incidents ⋈ behaviors with either
+side changing, and the per-day section max recomputed for the touched
+groups from the per-section counts."""
 
 from __future__ import annotations
 

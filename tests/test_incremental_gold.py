@@ -180,6 +180,12 @@ def test_validate_gold_reports_orphans_dupes_and_skips(spark, tmp_path):
            ("st1-s1", "st1", "s1")],                          # dup key
           "StudentSchoolKey string, StudentKey string, SchoolKey string")
     write("dateDim", [("20230815",), ("",)], "DateKey string")  # blank key
+    # st3 exited mid-year: absent from the enrolled-only studentSchoolDim,
+    # but its section row still resolves against allStudentSchoolDim
+    write("allStudentSchoolDim", [("st1-s1",), ("st3-s1",)],
+          "StudentSchoolKey string")
+    write("studentSectionDim", [("st3-s1-sec1", "st3-s1")],
+          "StudentSectionKey string, StudentSchoolKey string")
 
     rep = {r["check"]: (r["status"], r["violations"])
            for r in validate_gold(spark, str(tmp_path / "gold"),
@@ -188,6 +194,8 @@ def test_validate_gold_reports_orphans_dupes_and_skips(spark, tmp_path):
         ("FAIL", 1)
     assert rep["schoolDim(SchoolKey) unique"] == ("PASS", 0)
     assert rep["studentSchoolDim(StudentSchoolKey) unique"] == ("FAIL", 1)
+    assert rep[("studentSectionDim.StudentSchoolKey -> "
+                "allStudentSchoolDim.StudentSchoolKey")] == ("PASS", 0)
     assert rep["dateDim(DateKey) non-null"] == ("FAIL", 1)
     # absent views are SKIPPED, not failed
     assert rep["sectionDim(SectionKey) unique"] == ("SKIPPED", 0)

@@ -1,17 +1,21 @@
-"""Incremental chrab gold refresh at volume (VERDICT r10 item 1).
+"""Incremental IVM gold refresh at volume: chrab or ews.
 
 Synthesizes the scale_smoke silver layer at N students, builds the
-chrab attendance fact once through the IVM state path
-(`amt/chrab_incremental.full_build`), mutates ~1% of the attendance
-events (inserts + category flips + deletes), then times
-`refresh(...)` against the cost of the reference-style full recompute
-(`chrab.build()` + write, what GOLD_SCALE times) and verifies the
-spliced gold is row-identical to the full rebuild over the mutated
-silver.
+chrab attendance fact (or the ews early-warning fact with `ews`) once
+through the snapshot path (`amt/chrab_incremental.full_build`, which
+commits the per-event snapshots a refresh diffs against), mutates ~1%
+of the school attendance events (inserts + category flips + deletes;
+`clustered` puts them all on one date), then times `refresh(...)`
+against the cost of the reference-style full recompute (`build()` +
+write, what GOLD_SCALE times) and verifies the spliced gold is
+row-identical to the full rebuild over the mutated silver.
 
 Usage: python tools/incremental_gold_smoke.py [n_students] [out_dir]
+       [chrab|ews] [clustered]
 
-Writes GOLD_INCR_r11_n{N}.json at the repo root.
+Writes GOLD_INCR_r11[_ews][_clustered]_n{N}.json into out_dir (default
+/tmp/incr_gold_smoke), next to the silver, gold and snapshot
+directories it builds there.
 """
 
 from __future__ import annotations
@@ -171,9 +175,10 @@ def main() -> None:
     ci.full_build(spark, str(silver), SY, str(state), str(gold),
                   run_date=run_date)
     res["full_build_s"] = round(time.time() - t0, 2)
-    print(f"full_build (state path): {res['full_build_s']} s", flush=True)
+    print(f"full_build (snapshot path): {res['full_build_s']} s",
+          flush=True)
 
-    # The reference-style cost to beat: rebuild + rewrite, no state.
+    # The reference-style cost to beat: rebuild + rewrite, no snapshots.
     t0 = time.time()
     chrab.build(spark, str(silver), SY, run_date=run_date) \
         .write.mode("overwrite").parquet(str(out / "gold_full_ref"))
@@ -216,7 +221,7 @@ def main() -> None:
     tag = "" if which == "chrab" else f"_{which}"
     if clustered:
         tag += "_clustered"
-    artifact = REPO / f"GOLD_INCR_r11{tag}_n{n}.json"
+    artifact = out / f"GOLD_INCR_r11{tag}_n{n}.json"
     artifact.write_text(json.dumps(res, indent=2) + "\n")
     print(json.dumps(res))
     if not ok:
